@@ -89,13 +89,14 @@ object MinhashSigs {
       var nb = 1
       if (b0 < 0x80) cp = b0
       else if ((b0 & 0xE0) == 0xC0) {
-        cp = ((b0 & 0x1F) << 6) | (b(i + 1) & 0x3F); nb = 2
+        cp = ((b0 & 0x1F) << 6) | Simhash.cont(b, i + 1); nb = 2
       } else if ((b0 & 0xF0) == 0xE0) {
-        cp = ((b0 & 0x0F) << 12) | ((b(i + 1) & 0x3F) << 6) | (b(i + 2) & 0x3F)
+        cp = ((b0 & 0x0F) << 12) | (Simhash.cont(b, i + 1) << 6) |
+          Simhash.cont(b, i + 2)
         nb = 3
       } else {
-        cp = ((b0 & 0x07) << 18) | ((b(i + 1) & 0x3F) << 12) |
-          ((b(i + 2) & 0x3F) << 6) | (b(i + 3) & 0x3F); nb = 4
+        cp = ((b0 & 0x07) << 18) | (Simhash.cont(b, i + 1) << 12) |
+          (Simhash.cont(b, i + 2) << 6) | Simhash.cont(b, i + 3); nb = 4
       }
       cps(n) = cp; n += 1; i += nb
     }

@@ -101,6 +101,13 @@ object Simhash {
       arr
     })
 
+  /** Payload bits of continuation byte `j`, 0 past the end of `b`: a
+    * truncated multi-byte sequence (possible in a string cast from
+    * binary) decodes with its missing bytes as zero bits instead of
+    * reading out of bounds. */
+  @inline private[graft] def cont(b: Array[Byte], j: Int): Int =
+    if (j < b.length) b(j) & 0x3F else 0
+
   /** One-pass signature; [[NoTokens]] when the text holds no token. */
   def compute(text: UTF8String, numBits: Int): Long = {
     val ab = params(numBits)
@@ -122,13 +129,13 @@ object Simhash {
           var nb = 1
           if (b0 < 0x80) cp = b0
           else if ((b0 & 0xE0) == 0xC0) {
-            cp = ((b0 & 0x1F) << 6) | (b(i + 1) & 0x3F); nb = 2
+            cp = ((b0 & 0x1F) << 6) | cont(b, i + 1); nb = 2
           } else if ((b0 & 0xF0) == 0xE0) {
-            cp = ((b0 & 0x0F) << 12) | ((b(i + 1) & 0x3F) << 6) |
-              (b(i + 2) & 0x3F); nb = 3
+            cp = ((b0 & 0x0F) << 12) | (cont(b, i + 1) << 6) |
+              cont(b, i + 2); nb = 3
           } else {
-            cp = ((b0 & 0x07) << 18) | ((b(i + 1) & 0x3F) << 12) |
-              ((b(i + 2) & 0x3F) << 6) | (b(i + 3) & 0x3F); nb = 4
+            cp = ((b0 & 0x07) << 18) | (cont(b, i + 1) << 12) |
+              (cont(b, i + 2) << 6) | cont(b, i + 3); nb = 4
           }
           if (ci == 0) x += cp.toLong * 16777216L
           else if (ci == 1) x += cp.toLong * 65536L

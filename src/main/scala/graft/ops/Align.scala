@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,214 +8,146 @@ import org.apache.spark.sql.functions._
  * Time-alignment operators (SURVEY §2.4): stglib has no general join — it has
  * `reindex_like(method="nearest", tolerance=...)` patterns
  * (stglib/aqd/aqdutils.py:93-118, stglib/core/utils.py:1946-1956) and
- * calendar regularization (stglib/sig/cdf2nc.py:1553-1594). Re-expressed as
- * sub-bucketed equi-joins + a map-side-combinable best-candidate aggregate.
+ * calendar regularization (stglib/sig/cdf2nc.py:1553-1594).
  *
- * Scale design: the right ("aux") side is broadcast — met/boundary series are
- * orders of magnitude smaller than measurement series. Sub-buckets of width
- * tolerance/64 plus per-bucket boundary rows keep the candidate count per
- * left row O(density·width + 1) — independent of how many aux rows fall in
- * the tolerance band (see [[subBucketCandidates]]). Left rows with no
- * candidate within tolerance survive with nulls (reindex semantics, not
- * inner-join semantics).
+ * Every as-of op is one lazy bucketed sorted merge ([[brackets]]): both
+ * sides bucket by ⌊ts / tolerance⌋, each right row is copied into the
+ * neighbour buckets whose left rows it can reach, and the tagged union is
+ * hash-partitioned ONCE on the bucket. Inside a bucket, running-frame
+ * windows carry the latest right row forward (ts ascending) and the
+ * earliest right row backward (ts descending), so each left row reads its
+ * bracketing right rows off a sort — no candidate join, no per-left-row
+ * aggregate, no driver round trip. Work per row is O(log n) for the sort,
+ * independent of how many right rows fall in the tolerance band. Left rows
+ * map 1:1 to output rows (duplicates included); a left row with no right
+ * row within tolerance survives with nulls (reindex semantics, not
+ * inner-join semantics). Time columns are integral and share units
+ * (long microseconds by convention). Column names `__k`, `__t`, `__tag`,
+ * `__r`, `__rb` and `__ra` are reserved.
  */
 object Align {
 
-  /** Sub-buckets per tolerance width — candidate count per left row is
-    * O(aux density · tolerance / SubBuckets + 1). */
-  private val SubBuckets = 64L
-
-  /** For every key in `leftKeys` (distinct BIGINT col `__kk`), the max of
-    * `vals.__v` over val-keys STRICTLY below the left key (Long.MinValue
-    * when none). Scale-safe: [[Index.withRunningMax]] over the BUCKET axis
-    * (bounded by time-span / bucket width, never by data size), the
-    * strictly-below semantics from shifting val keys up by one and making
-    * left keys sort after val rows on the same key. */
-  private def strictPrefixMax(leftKeys: DataFrame, vals: DataFrame): DataFrame = {
-    val tagged = vals
-      .select((col("__kk") + 1).as("__kk"), col("__v"), lit(0).as("__tag"))
-      .unionByName(leftKeys.select(col("__kk"),
-        lit(null).cast("long").as("__v"), lit(1).as("__tag")))
-    Index.withRunningMax(tagged, Seq("__kk", "__tag"), "__v", "__bound")
-      .filter(col("__tag") === 1)
-      .select(col("__kk"), col("__bound"))
-  }
-
   /**
-   * Sub-bucketed as-of core (round-12 scale rework). The old design used
-   * tolerance-wide buckets, so EVERY aux row within the band joined every
-   * left row — candidates grow linearly with aux density (measured 7.5×
-   * bench time on 10× denser aux at sf1). With buckets of width
-   * tolerance/[[SubBuckets]], the best match for a left row is either in
-   * the row's OWN sub-bucket or is exactly the boundary row — the latest
-   * aux ts strictly before the bucket (and, for `nearest`, the earliest
-   * strictly after) — computed once per bucket via the ranged running-max
-   * index, no global window. Exactness: every pre-bucket aux row is ≤ the
-   * pre-bucket boundary ts, so if the boundary row fails the tolerance
-   * every farther row does too; ties at the boundary ts all join and the
-   * final aggregate applies the same tie-break as before.
+   * The shared as-of plan: every left row plus `__rb`, the right row
+   * (struct of all right columns) with the greatest (rightTs, payload)
+   * at-or-before leftTs, and/or `__ra`, the one with the least
+   * (rightTs, payload) at-or-after leftTs — null when the bucket
+   * neighbourhood holds none. `nearestTies` flips `__rb`'s payload
+   * tie-break to the LEAST payload among rows at its timestamp (as-of
+   * nearest breaks every tie towards the smaller payload).
    *
-   * Selection is a map-side-combinable max_by/min_by aggregation over the
-   * (now O(1)-ish) candidate set — no per-left-row sort window at all.
-   *
-   * Returns (left bucket relation, candidate relation keyed by `__k`).
+   * Exactness: buckets are tolerance-wide (floor division, so negative
+   * times bucket correctly), so a right row within tolerance of a left
+   * row in bucket k lies in bucket k−1, k or k+1, and a right row outside
+   * those buckets is more than one tolerance away. Each right row is
+   * copied to the buckets that can see it — k−1..k+1 with both brackets,
+   * k..k+1 for `__rb` only, k−1..k for `__ra` only. A bracket found in the
+   * neighbourhood is the global bracket whenever the global one passes
+   * the tolerance; callers apply that check. Right rows with a null
+   * timestamp never match; a left row with a null timestamp gets nulls.
+   * At equal timestamps right rows sort before left rows (tag 0 < 1), so
+   * exact hits bracket from both sides.
    */
-  private def subBucketCandidates(left: DataFrame, right: DataFrame,
-                                  leftTs: String, rightTs: String,
-                                  tolerance: Long, withBefore: Boolean,
-                                  withAfter: Boolean)
-      : (DataFrame, DataFrame) = {
-    val w = math.max(tolerance / SubBuckets, 1L)
-    val lb = Spread.byKey(left, col(leftTs))
-      .withColumn("__k", expr(s"$leftTs div $w"))
-    val rb = right.withColumn("__k", expr(s"$rightTs div $w"))
-    val leftKeys = lb.select(col("__k").as("__kk")).distinct()
-    val perBucket = rb.groupBy("__k").agg(
-      max(col(rightTs)).as("__bmax"), min(col(rightTs)).as("__bmin"))
-    val own = rb.select(col("__k") +: right.columns.map(col): _*)
-    var cand = own
-    if (withBefore) {
-      // boundary BEFORE: latest aux ts in buckets strictly below k
-      val before = strictPrefixMax(leftKeys,
-          perBucket.select(col("__k").as("__kk"), col("__bmax").as("__v")))
-        .filter(col("__bound") =!= Long.MinValue)
-        .join(rb.drop("__k"), col("__bound") === col(rightTs))
-        .select(col("__kk").as("__k") +: right.columns.map(col): _*)
-      cand = cand.unionByName(before)
-    }
-    if (withAfter) {
-      // boundary AFTER: earliest aux ts in buckets strictly above k —
-      // the same strict-prefix machinery on negated keys/values
-      val after = strictPrefixMax(
-          leftKeys.select(negate(col("__kk")).as("__kk")),
-          perBucket.select(negate(col("__k")).as("__kk"),
-            negate(col("__bmin")).as("__v")))
-        .filter(col("__bound") =!= Long.MinValue)
-        .select(negate(col("__kk")).as("__kk"), negate(col("__bound")).as("__next"))
-        .join(rb.drop("__k"), col("__next") === col(rightTs))
-        .select(col("__kk").as("__k") +: right.columns.map(col): _*)
-      cand = cand.unionByName(after)
-    }
-    (lb, cand)
+  private def brackets(left: DataFrame, right: DataFrame, leftTs: String,
+                       rightTs: String, tolerance: Long, before: Boolean,
+                       after: Boolean, nearestTies: Boolean = false): DataFrame = {
+    val w = math.max(tolerance, 1L)
+    def bucket(ts: String) = expr(s"(`$ts` - pmod(`$ts`, ${w}L)) div ${w}L")
+    val lo = if (after) -1 else 0
+    val hi = if (before) 1 else 0
+    val rStruct = struct(right.columns.map(col): _*)
+    val l = left.select(bucket(leftTs).as("__k") +: col(leftTs).as("__t") +:
+      lit(1).as("__tag") +: left.columns.map(col) :+
+      lit(null).cast(right.schema).as("__r"): _*)
+    val r = right.filter(col(rightTs).isNotNull)
+      .select(explode(array((lo to hi).map(o => bucket(rightTs) + o): _*))
+          .as("__k") +: col(rightTs).as("__t") +: lit(0).as("__tag") +:
+        left.schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)) :+
+        rStruct.as("__r"): _*)
+    // the last right row so far in (ts, tag, payload) order
+    def latest(order: Column*) = last(col("__r"), ignoreNulls = true)
+      .over(Window.partitionBy("__k").orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    var u = l.unionByName(r)
+    if (before) u = u.withColumn("__rb", latest(col("__t").asc,
+      col("__tag").asc, if (nearestTies) col("__r").desc else col("__r").asc))
+    if (after) u = u.withColumn("__ra",
+      latest(col("__t").desc, col("__tag").asc, col("__r").desc))
+    u.filter(col("__tag") === 1).drop("__k", "__t", "__tag", "__r")
   }
+
+  /** `__rb` / `__ra` if it lies within `tolerance` of leftTs. */
+  private def withinBefore(leftTs: String, rightTs: String, tolerance: Long) =
+    col("__rb").isNotNull && col(leftTs) - col(s"__rb.$rightTs") <= tolerance
+  private def withinAfter(leftTs: String, rightTs: String, tolerance: Long) =
+    col("__ra").isNotNull && col(s"__ra.$rightTs") - col(leftTs) <= tolerance
+
+  /** Left columns, then the chosen right row's columns (all null when
+    * `best` is null). */
+  private def expand(df: DataFrame, left: DataFrame, right: DataFrame,
+                     best: Column): DataFrame =
+    df.withColumn("__r", best).select(left.columns.map(col) ++
+      right.columns.map(c => col("__r").getField(c).as(c)): _*)
 
   /** As-of nearest: for each left row, the single right row minimizing
-    * |leftTs − rightTs| within tolerance; ties to the earlier right row.
-    * Time columns must share units (we standardize on long microseconds).
-    * Precondition: left rows are distinct (selection groups by the full
-    * left row; duplicated left rows would collapse to one). */
+    * |leftTs − rightTs| within tolerance; ties go to the earlier right row,
+    * then to the least payload (struct order of the right columns). */
   def asofNearest(left: DataFrame, right: DataFrame,
                   leftTs: String, rightTs: String, tolerance: Long): DataFrame = {
-    val (lb, cand) = subBucketCandidates(left, right, leftTs, rightTs,
-      tolerance, withBefore = true, withAfter = true)
-    // cand carries the sub-bucketed right SERIES (data-sized in
-    // deployment length) — no forced broadcast; the join is equi on
-    // __k, so AQE broadcasts a small aux series and shuffles a big one
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col(rightTs) >= col(leftTs) - tolerance &&
-        col(rightTs) <= col(leftTs) + tolerance, "left")
-      .drop("__k")
-    val ord = struct(abs(col(leftTs) - col(rightTs)) +: col(rightTs) +:
-      right.columns.filter(_ != rightTs).map(col): _*)
-    bestPerLeft(joined, left, right, min_by(_, ord))
+    val b = brackets(left, right, leftTs, rightTs, tolerance,
+      before = true, after = true, nearestTies = true)
+    val okB = withinBefore(leftTs, rightTs, tolerance)
+    val okA = withinAfter(leftTs, rightTs, tolerance)
+    val (tb, ta) = (col(s"__rb.$rightTs"), col(s"__ra.$rightTs"))
+    // the after row wins on a strictly smaller distance, and on an exact
+    // hit (both brackets then sit at leftTs with the same least payload);
+    // an equal distance on both sides goes to the earlier, before row
+    val pickA = okA && (!okB || ta - col(leftTs) < col(leftTs) - tb || ta === tb)
+    expand(b, left, right, when(pickA, col("__ra")).when(okB, col("__rb")))
   }
 
   /** As-of backward: most recent right row at-or-before leftTs within
-    * tolerance (boundary/brange pattern, stglib/aqd/aqdutils.py:550-560). */
+    * tolerance, ties to the greatest payload (boundary/brange pattern,
+    * stglib/aqd/aqdutils.py:550-560). */
   def asofBackward(left: DataFrame, right: DataFrame,
                    leftTs: String, rightTs: String, tolerance: Long): DataFrame = {
-    val (lb, cand) = subBucketCandidates(left, right, leftTs, rightTs,
-      tolerance, withBefore = true, withAfter = false)
-    // cand carries the sub-bucketed right SERIES (data-sized in
-    // deployment length) — no forced broadcast; the join is equi on
-    // __k, so AQE broadcasts a small aux series and shuffles a big one
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col(rightTs) <= col(leftTs) &&
-        col(rightTs) >= col(leftTs) - tolerance, "left")
-      .drop("__k")
-    val ord = struct(col(rightTs) +:
-      right.columns.filter(_ != rightTs).map(col): _*)
-    bestPerLeft(joined, left, right, max_by(_, ord))
+    val b = brackets(left, right, leftTs, rightTs, tolerance,
+      before = true, after = false)
+    expand(b, left, right,
+      when(withinBefore(leftTs, rightTs, tolerance), col("__rb")))
   }
 
-  /** Shared selection tail: one aggregate row per left row (left rows are
-    * distinct by precondition), payload = the chosen right row's columns
-    * (all null when no candidate survived the tolerance). */
-  private def bestPerLeft(joined: DataFrame, left: DataFrame, right: DataFrame,
-                          pick: org.apache.spark.sql.Column =>
-                            org.apache.spark.sql.Column): DataFrame = {
-    val payload = struct(right.columns.map(col): _*)
-    joined.groupBy(left.columns.map(col): _*)
-      .agg(pick(payload).as("__best"))
-      .select(left.columns.map(col) ++
-        right.columns.map(c => col(s"__best.$c").as(c)): _*)
-  }
-
-  /** As-of forward: earliest right row at-or-after leftTs within tolerance
-    * (the other bracket of linear interpolation). */
+  /** As-of forward: earliest right row at-or-after leftTs within tolerance,
+    * ties to the least payload (the other bracket of linear interpolation). */
   def asofForward(left: DataFrame, right: DataFrame,
                   leftTs: String, rightTs: String, tolerance: Long): DataFrame = {
-    val (lb, cand) = subBucketCandidates(left, right, leftTs, rightTs,
-      tolerance, withBefore = false, withAfter = true)
-    // cand carries the sub-bucketed right SERIES (data-sized in
-    // deployment length) — no forced broadcast; the join is equi on
-    // __k, so AQE broadcasts a small aux series and shuffles a big one
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col(rightTs) >= col(leftTs) &&
-        col(rightTs) <= col(leftTs) + tolerance, "left")
-      .drop("__k")
-    val ord = struct(col(rightTs) +:
-      right.columns.filter(_ != rightTs).map(col): _*)
-    bestPerLeft(joined, left, right, min_by(_, ord))
+    val b = brackets(left, right, leftTs, rightTs, tolerance,
+      before = false, after = true)
+    expand(b, left, right,
+      when(withinAfter(leftTs, rightTs, tolerance), col("__ra")))
   }
 
   /** Linear time interpolation of a right-side series onto left timestamps —
     * the reference's `reindex`/`interp` with method="linear" (xarray interp;
     * e.g. stglib met-series alignment): y = y0 + (y1−y0)·(t−t0)/(t1−t0)
-    * from the bracketing right rows within tolerance; exact hits return y0;
-    * a missing bracket yields null (no extrapolation, like xarray's NaN
-    * outside). Built from the bucketized as-of joins — two broadcast-range
-    * equi-joins, no global sort. */
+    * from the bracketing right rows within tolerance — (t0, y0) the
+    * [[asofBackward]] row, (t1, y1) the [[asofForward]] row; exact hits
+    * return y0; a missing bracket yields null (no extrapolation, like
+    * xarray's NaN outside). Both brackets come from one [[brackets]] pass. */
   def interpLinear(left: DataFrame, right: DataFrame, leftTs: String,
                    rightTs: String, valCol: String, tolerance: Long,
                    outCol: String): DataFrame = {
-    // BOTH brackets from ONE sub-bucket pass (r17): the chained
-    // asofBackward∘asofForward form ran the whole candidate machinery
-    // (bucket index, boundary rows via two running-max passes, join,
-    // per-left aggregate) twice over the same right series. One joined
-    // candidate set + two conditional struct aggregates select the
-    // identical rows: max(struct(t0, y0)) over rightTs ≤ leftTs is
-    // exactly asofBackward's max_by(payload, struct(rightTs, y)) because
-    // payload and ordering struct have the same fields in the same
-    // order, and min(struct(t1, y1)) over rightTs ≥ leftTs is
-    // asofForward's min_by — InterpSamePathSpec proves row equality
-    // against the chained form on the registered query and edge series.
     val r = right.select(col(rightTs).as("__rt"), col(valCol).as("__rv"))
-    val (lb, cand) = subBucketCandidates(left, r, leftTs, "__rt",
-      tolerance, withBefore = true, withAfter = true)
-    val joined = lb.as("l").join(cand.as("r"),
-        col("l.__k") === col("r.__k") &&
-        col("__rt") >= col(leftTs) - tolerance &&
-        col("__rt") <= col(leftTs) + tolerance, "left")
-      .drop("__k")
-    joined.groupBy(left.columns.map(col): _*)
-      .agg(
-        max(when(col("__rt") <= col(leftTs),
-          struct(col("__rt").as("__t0"), col("__rv").as("__y0")))).as("__lo"),
-        min(when(col("__rt") >= col(leftTs),
-          struct(col("__rt").as("__t1"), col("__rv").as("__y1")))).as("__hi"))
-      .select(left.columns.map(col) :+
-        col("__lo.__t0").as("__t0") :+ col("__lo.__y0").as("__y0") :+
-        col("__hi.__t1").as("__t1") :+ col("__hi.__y1").as("__y1"): _*)
-      .withColumn(outCol,
-        when(col("__t1") === col("__t0"), col("__y0"))
-          .otherwise(col("__y0") + (col("__y1") - col("__y0")) *
-            ((col(leftTs) - col("__t0")).cast("double") /
-             (col("__t1") - col("__t0")).cast("double"))))
-      .drop("__t0", "__y0", "__t1", "__y1")
+    val b = brackets(left, r, leftTs, "__rt", tolerance,
+      before = true, after = true)
+    val lo = when(withinBefore(leftTs, "__rt", tolerance), col("__rb"))
+    val hi = when(withinAfter(leftTs, "__rt", tolerance), col("__ra"))
+    val (t0, y0, t1, y1) = (lo("__rt"), lo("__rv"), hi("__rt"), hi("__rv"))
+    b.withColumn(outCol,
+        when(t1 === t0, y0)
+          .otherwise(y0 + (y1 - y0) *
+            ((col(leftTs) - t0).cast("double") / (t1 - t0).cast("double"))))
+      .select(left.columns.map(col) :+ col(outCol): _*)
   }
 
   /** Perfect calendar grid [startUs, endUs) with the given step — the

@@ -13,8 +13,6 @@ package graft.ops
   * release). */
 private[graft] final class BoundedMemo[K, V](cap: Int)(onEvict: V => Unit) {
 
-  BoundedMemo.register(this)
-
   private final class Cell(compute: () => V) {
     @volatile var computed = false
     lazy val value: V = { val v = compute(); computed = true; v }
@@ -54,6 +52,10 @@ private[graft] final class BoundedMemo[K, V](cap: Int)(onEvict: V => Unit) {
     }
     map.clear()
   }
+
+  // published only once `map` is initialised: a clearAll() on another
+  // thread must never see this memo half-constructed
+  BoundedMemo.register(this)
 }
 
 private[graft] object BoundedMemo {

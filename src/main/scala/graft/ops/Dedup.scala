@@ -744,7 +744,14 @@ object Dedup {
 
   /** Wide MinHash signatures (id, mh0..mh{k-1}): ONE aggregation over the
     * spread shingle rows — the shared core of [[minhashSignatures]] (long
-    * format) and [[minhashLshPairs]] (bands + estimates). */
+    * format) and [[minhashLshPairs]] (bands + estimates).
+    *
+    * Precondition: `idCol` is unique in `df` (corpus-unique doc ids). The
+    * kernel emits one signature per ROW, where the SQL form's groupBy
+    * would merge duplicate-id rows into one signature over their shingle
+    * union, so a duplicate id fails the job loudly instead of silently
+    * changing the row set. The check is a per-id row count over the
+    * id-spread partitions: no extra exchange, no extra job. */
   def wideSignatures(df: DataFrame, idCol: String, textCol: String,
                      numHashes: Int, shingleK: Int = 3): DataFrame = {
     // one-pass codegen kernel (r18, the simhash pattern): the shingle
@@ -755,8 +762,13 @@ object Dedup {
     if (shingleK != 3)
       return wideSignaturesSql(df, idCol, textCol, numHashes, shingleK)
     Spread.byKey(df, col(idCol))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col(idCol))))
       .select(col(idCol),
-        graft.functions.MinhashSigs.sigs(col(textCol), numHashes).as("__mhs"))
+        when(col("__n") === 1,
+          graft.functions.MinhashSigs.sigs(col(textCol), numHashes))
+          .otherwise(raise_error(concat(lit(s"wideSignatures: $idCol "),
+            col(idCol).cast("string"),
+            lit(" is not unique; ids must be corpus-unique")))).as("__mhs"))
       .select(col(idCol) +: (0 until numHashes).map(i =>
         element_at(col("__mhs"), i + 1).as(s"mh$i")): _*)
   }

@@ -365,8 +365,6 @@ object Spectra {
       Index.withGlobalPositionCounted(df, orderCols, "__pos")
     val base = df.sparkSession.sessionState.conf.numShufflePartitions
     val n = math.max(base, math.min(total / 262144L + 1L, 4096L).toInt)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_WIDTH"))
-      System.err.println(s"[width] filtwl: $total rows -> $n partitions")
     val filt0 = segmentFilt(pos, valueCol, sos, 65536, n).toDF()
       .select(col("sample").as("__pos"), col("value_filt").as("__vf"))
     // explicit same-width same-key repartitions on both join sides

@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
  * re-expressed over the synthetic events table. All timestamps are compared
  * as BIGINT microseconds on both engines (see Relational's ts convention).
  *
- * Scale notes: the aux ("met") side of every alignment is small relative to
- * the measurement series (hourly means vs raw samples), so each join is
- * explicitly broadcast — no shuffle of the big side. The as-of pattern is a
- * bounded range join + per-left-row rank, which AQE handles without a
- * cartesian explosion because the tolerance bounds the band.
+ * Scale notes: join_atmos is a plain equi-join on the hour (AQE broadcasts
+ * the one-row-per-hour met series when it fits). The as-of queries run
+ * `Align`'s bucketed sorted merge: both sides bucketed by tolerance, one
+ * hash exchange on the bucket, and running windows that bracket each left
+ * row — no candidate join and no per-left-row aggregate, so cost does not
+ * grow with how many aux rows fall inside the tolerance band.
  */
 object Alignment {
   import Tables._

@@ -39,14 +39,16 @@ private[streaming] case class ArrivalId()
  * stglib/aqd/aqdutils.py:93-118), for live atmospheric-correction /
  * sensor-fusion feeds.
  *
- * Shape: the batch sub-bucket candidate design made watermark-evictable.
- * Both sides bucket by ⌊ts / tolerance⌋; the right side replicates into
- * its bucket and both neighbors (any right row within tolerance of a left
- * row lands in the left row's bucket by construction), the stream-stream
- * equi-join on bucket + the |Δt| ≤ tolerance range predicate bounds join
- * state, and a per-left-row `min_by` over (|Δt|, rightTs, payload) picks
- * the nearest candidate with ties to the earlier right row — exactly the
- * batch operator's ordering. The aggregation keys on the watermarked left
+ * Shape: the batch operator's bucketing made watermark-evictable. Both
+ * sides bucket by ⌊ts / tolerance⌋ and the right side replicates into its
+ * bucket and both neighbors (any right row within tolerance of a left row
+ * lands in the left row's bucket by construction), as in the batch
+ * operator. Streaming has no running-frame windows, so where the batch
+ * operator brackets each left row with sorted windows per bucket, this
+ * form joins: the stream-stream equi-join on bucket + the |Δt| ≤ tolerance
+ * range predicate bounds join state, and a per-left-row `min_by` over
+ * (|Δt|, rightTs, payload) picks the nearest candidate with ties to the
+ * earlier right row — exactly the batch operator's ordering. The aggregation keys on the watermarked left
  * event time, so each left row's result emits once the watermark proves
  * no nearer candidate can still arrive. Two stateful operators chained in
  * append mode — supported by Spark's multi-stateful-operator pipelines.

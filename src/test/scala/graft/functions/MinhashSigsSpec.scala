@@ -61,4 +61,14 @@ class MinhashSigsSpec extends AnyFunSuite {
     val r2 = out.filter(col("doc_id") === 2L).collect()(0)
     assert((1 to 4).forall(i => !r2.isNullAt(i)))
   }
+
+  test("a duplicated id fails the job instead of emitting two signatures") {
+    import spark.implicits._
+    val df = Seq((1L, "alpha beta"), (2L, "gamma"), (1L, "delta"))
+      .toDF("doc_id", "text")
+    val e = intercept[Exception](
+      graft.ops.Dedup.wideSignatures(df, "doc_id", "text", 4).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("doc_id 1 is not unique")))
+  }
 }

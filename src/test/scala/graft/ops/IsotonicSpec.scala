@@ -44,4 +44,11 @@ class IsotonicSpec extends AnyFunSuite {
       Spread.release(spark)
     }
   }
+
+  test("a null n_pos fails loudly instead of reading as zero") {
+    import spark.implicits._
+    val bins = Seq((0, 5L, Some(1L)), (1, 4L, None)).toDF("bin", "n_docs", "n_pos")
+    val e = intercept[IllegalArgumentException](Curation.isotonicFit(bins))
+    assert(e.getMessage.contains("n_pos must be non-null"))
+  }
 }
